@@ -9,11 +9,14 @@ utils.py:21-54): at window starting at row offset i,
 - t = 0 quirk: train := test (utils.py:39-42), replicated for parity
 - the model is refit from scratch every window
 
+The window loop (``fold.WindowLoop``) keeps that prefix as a buffer of the
+completed windows' rows, optionally capped to the most recent rows.
+
 The reference's example model is sklearn KNeighborsClassifier(n_neighbors=5)
 (/root/reference/examples/example_ofs.py:24); sklearn is not available in the
 target environment, so we provide an equivalent NumPy k-NN (euclidean,
-majority vote, smallest-label tie-break like scipy ``mode``) plus a cheap
-logistic-regression option. Both are deterministic.
+majority vote, smallest-label tie-break like scipy ``mode``); it is
+deterministic.
 """
 
 from __future__ import annotations
@@ -68,26 +71,3 @@ def knn_accuracy(
     correct = int(np.sum(pred == y_test))
     return correct / max(1, n_test)
 
-
-def prequential_accuracy(
-    X: np.ndarray,
-    y: np.ndarray,
-    start: int,
-    stop: int,
-    selected: np.ndarray,
-    k: int = 5,
-    max_train_rows: int | None = None,
-) -> float:
-    """Accuracy for the window X[start:stop] trained on the strict prefix
-    X[0:start] (t=0: train = test). ``max_train_rows`` optionally caps the
-    prefix to its most recent rows (documented deviation for O(T²) control;
-    None = faithful reference behavior)."""
-    x_test = X[start:stop][:, selected]
-    y_test = y[start:stop]
-    if start == 0:
-        x_train, y_train = x_test, y_test
-    else:
-        lo = 0 if max_train_rows is None else max(0, start - max_train_rows)
-        x_train = X[lo:start][:, selected]
-        y_train = y[lo:start]
-    return knn_accuracy(x_train, y_train, x_test, y_test, k=k)

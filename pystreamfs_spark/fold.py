@@ -6,30 +6,40 @@ state scope is the entity (``conv_id``): parallel across conversations,
 strictly ordered within one — the faithful transcript semantics AND the
 scalability unlock (SURVEY.md §7).
 
-Two physical strategies, identical results:
+:class:`WindowLoop` is that loop, written once and Spark-free: it cuts an
+ordered row stream into count windows, carries the partial tail and the
+prequential prefix across calls, and returns one record per completed
+window. Every fold is a thin feeder around it:
 
-- :func:`fold_weights` — ``groupBy(conv_id).applyInPandas``: one Arrow call
-  per conversation. Simple; materializes a whole conversation per call.
-- :func:`fold_weights_stream` — ``repartitionByRange(conv_id) +
-  sortWithinPartitions + mapInPandas``: a partition-local streaming scan that
-  carries kernel state across Arrow batches. Memory is O(arrow batch +
-  kernel state + current window), not O(conversation) — this is the 100 TB
-  path (a 10⁹-turn conversation streams through one task without
-  materializing).
+- :func:`fold_weights` — ``groupBy(conv_id).applyInPandas``: one
+  ``feed(final=True)`` per whole conversation.
+- :func:`fold_weights_stream` — ``repartition(conv_id) +
+  sortWithinPartitions + mapInArrow``: a partition-local scan that feeds each
+  entity segment of each Arrow batch, so kernel state carries across batch
+  boundaries. Memory is O(arrow batch + kernel state + current window), not
+  O(conversation) — a 10⁹-turn conversation streams through one task without
+  materializing.
+- ``streaming.adapter.stream_fold`` (one feed per micro-batch) and
+  ``fsds_merge.fold_fsds_fast`` (one feed per chunk, seeded with the prefix
+  sketch).
 
-Both do exactly one shuffle (hash vs range partition on conv_id); everything
-upstream (featurization) and downstream (stability, joins) stays in
-whole-stage codegen.
+Both batch folds do exactly one hash shuffle on conv_id (none when the
+input is already partitioned); everything upstream (featurization) and
+downstream (stability, joins) stays in whole-stage codegen. Entity ids are
+folded as strings: a non-string id column is cast with Spark's cast, and a
+null id is one entity whose output ``conv_id`` is NULL.
 """
 
 from __future__ import annotations
 
+import mmap
 import time
 from typing import Any, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from pyspark.sql.types import (
     ArrayType,
@@ -42,26 +52,139 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from pystreamfs_spark.classify import prequential_accuracy
+from pystreamfs_spark.classify import knn_accuracy
 from pystreamfs_spark.kernels import KERNELS, init_state, select_top_m, update
 
-try:  # optional: per-worker USS memory metric (reference pystreamfs.py:74)
-    import psutil  # type: ignore
 
-    def _mem_bytes() -> int:
-        return psutil.Process().memory_full_info().uss
-
-except Exception:  # pragma: no cover - psutil absent in target env
-
-    def _mem_bytes() -> int:
+def _mem_bytes() -> int:
+    """Resident bytes of this worker process (the reference's per-window
+    memory series, pystreamfs.py:74); -1 where ``/proc`` is unavailable."""
+    try:
+        with open("/proc/self/statm", "rb") as f:
+            return int(f.read().split()[1]) * mmap.PAGESIZE
+    except FileNotFoundError:
         return -1
 
 
-def _rows_to_pdf(rows: list[tuple]) -> pd.DataFrame:
-    out = pd.DataFrame(rows, columns=[f.name for f in WEIGHTS_SCHEMA.fields])
-    # np.datetime64 scalars in an object column confuse Arrow; normalize
-    out["ts_end"] = pd.to_datetime(out["ts_end"])
-    return out
+_NO_ENTITY = object()  # scan sentinel: no entity seen yet
+
+
+class WindowLoop:
+    """The per-entity window loop shared by every fold.
+
+    Cuts one entity's ordered rows into count windows of ``batch_size``,
+    threads the kernel state through them and selects the top
+    ``num_features`` after each (reference pystreamfs.py:59-69). Rows may
+    arrive through :meth:`feed` in any chunking: a partial last window is
+    carried to the next call until ``final=True`` (or :meth:`finish`) flushes
+    it, so the records never depend on how the rows were split.
+
+    ``with_accuracy`` scores each window prequentially with k-NN on the
+    selected features, trained on the rows of the earlier windows — only the
+    most recent ``max_train_rows`` of them when a cap is given — and, at the
+    first window, on the window itself (reference utils.py:39-42).
+    ``train_rows`` reports the full prefix length either way.
+
+    ``state`` and ``window_id`` resume a loop (a Structured Streaming state
+    row, a merged FSDS prefix sketch); ``state``, ``wid``, ``carry_X``,
+    ``carry_y`` and ``carry_ts`` may be read back and restored.
+
+    Each record is ``(window_id, win_rows, ts_end, w, selected, acc,
+    train_rows, elapsed_sec)``; ``ts_end`` is None without ``ts`` and
+    ``elapsed_sec`` times the kernel update plus the top-m selection.
+    """
+
+    def __init__(
+        self,
+        kernel: str,
+        m: int,
+        batch_size: int,
+        num_features: int,
+        kernel_kwargs: dict[str, Any] | None = None,
+        max_train_rows: int | None = None,
+        *,
+        with_accuracy: bool = False,
+        state: Any = None,
+        window_id: int = 0,
+    ) -> None:
+        if batch_size < 1:
+            raise ValueError(f"batch_size must be >= 1, got {batch_size}")
+        self.kernel = kernel
+        self.batch_size = batch_size
+        self.num_features = num_features
+        self.max_train_rows = max_train_rows
+        self.with_accuracy = with_accuracy
+        if state is None:
+            state = init_state(kernel, m, num_features=num_features, **(kernel_kwargs or {}))
+        self.state = state
+        self.wid = window_id
+        self.carry_X: np.ndarray | None = None
+        self.carry_y: np.ndarray | None = None
+        self.carry_ts: np.ndarray | None = None
+        # prequential prefix: rows of the completed windows (capped suffix)
+        self.buf_X: np.ndarray | None = None
+        self.buf_y: np.ndarray | None = None
+        self.rows_seen = 0
+
+    def feed(
+        self, X: np.ndarray, y: np.ndarray, ts: np.ndarray | None = None, final: bool = False
+    ) -> list[tuple]:
+        """Append ordered rows; return the records of the windows they complete."""
+        if self.carry_X is not None and len(self.carry_X):
+            X = np.concatenate([self.carry_X, X])
+            y = np.concatenate([self.carry_y, y])
+            if ts is not None:
+                ts = np.concatenate([self.carry_ts, ts])
+        n = len(X)
+        bs = self.batch_size
+        out: list[tuple] = []
+        start = 0
+        while n - start >= bs or (final and start < n):
+            stop = min(start + bs, n)
+            Xw, yw = X[start:stop], y[start:stop]
+            t0 = time.perf_counter()
+            self.state, w = update(self.kernel, self.state, Xw, yw)
+            selected = select_top_m(w, self.num_features)
+            elapsed = time.perf_counter() - t0
+            acc, train_rows = self._score(Xw, yw, selected) if self.with_accuracy else (None, 0)
+            ts_end = None if ts is None else ts[stop - 1]
+            out.append((self.wid, stop - start, ts_end, w, selected, acc, train_rows, elapsed))
+            self.wid += 1
+            start = stop
+        self.carry_X, self.carry_y = X[start:].copy(), y[start:].copy()
+        self.carry_ts = None if ts is None else ts[start:].copy()
+        return out
+
+    def finish(self) -> list[tuple]:
+        """End of the entity's rows: flush the carried partial window."""
+        if self.carry_X is None:
+            return []
+        ts = None if self.carry_ts is None else self.carry_ts[:0]
+        return self.feed(self.carry_X[:0], self.carry_y[:0], ts, final=True)
+
+    def _score(self, Xw: np.ndarray, yw: np.ndarray, selected: np.ndarray) -> tuple[float, int]:
+        x_test = Xw[:, selected]
+        if self.rows_seen == 0:  # t=0 quirk: train = test
+            acc, train_rows = knn_accuracy(x_test, yw, x_test, yw), len(Xw)
+            self.buf_X, self.buf_y = Xw, yw
+        else:
+            acc = knn_accuracy(self.buf_X[:, selected], self.buf_y, x_test, yw)
+            train_rows = self.rows_seen
+            self.buf_X = np.concatenate([self.buf_X, Xw])
+            self.buf_y = np.concatenate([self.buf_y, yw])
+        if self.max_train_rows is not None:
+            lo = max(0, len(self.buf_X) - self.max_train_rows)
+            self.buf_X, self.buf_y = self.buf_X[lo:], self.buf_y[lo:]
+        self.rows_seen += len(Xw)
+        return acc, train_rows
+
+
+def _entity_as_string(df: DataFrame, entity_col: str) -> DataFrame:
+    """Both folds emit ``conv_id`` as a string: cast any other id type once,
+    in Spark, so the two feeders agree on its text (nulls stay null)."""
+    if isinstance(df.schema[entity_col].dataType, StringType):
+        return df
+    return df.withColumn(entity_col, F.col(entity_col).cast(StringType()))
 
 
 WEIGHTS_SCHEMA = StructType(
@@ -78,51 +201,6 @@ WEIGHTS_SCHEMA = StructType(
         StructField("mem_bytes", LongType()),
     ]
 )
-
-
-def _fold_one_conv(
-    conv_id: str,
-    X: np.ndarray,
-    y: np.ndarray,
-    ts: np.ndarray,
-    kernel: str,
-    batch_size: int,
-    num_features: int,
-    kernel_kwargs: dict[str, Any],
-    with_accuracy: bool,
-    max_train_rows: int | None,
-) -> list[tuple]:
-    """Run the window loop for one fully-materialized conversation."""
-    m = X.shape[1]
-    state = init_state(kernel, m, num_features=num_features, **kernel_kwargs)
-    out: list[tuple] = []
-    n = X.shape[0]
-    for wid, start in enumerate(range(0, n, batch_size)):
-        stop = min(start + batch_size, n)
-        t0 = time.perf_counter()
-        state, w = update(kernel, state, X[start:stop], y[start:stop])
-        selected = select_top_m(w, num_features)
-        elapsed = time.perf_counter() - t0
-        acc = None
-        train_rows = 0
-        if with_accuracy:
-            acc = prequential_accuracy(X, y, start, stop, selected, max_train_rows=max_train_rows)
-            train_rows = stop - start if start == 0 else start
-        out.append(
-            (
-                conv_id,
-                wid,
-                stop - start,
-                ts[stop - 1],
-                w.tolist(),
-                [int(j) for j in selected],
-                acc,
-                train_rows,
-                elapsed,
-                _mem_bytes(),
-            )
-        )
-    return out
 
 
 def fold_weights(
@@ -144,6 +222,11 @@ def fold_weights(
     Input must have (entity_col, *order_cols, features array<double>,
     label double, ts timestamp). Output: one row per (conv_id, window_id)
     with the post-window weight vector, top-m selection and metrics.
+
+    It feeds each whole conversation to the loop at once, so it is the
+    cross-check for :func:`fold_weights_stream`'s Arrow-batch carry.
+    ``with_accuracy`` trains on the whole prefix unless ``max_train_rows``
+    caps it.
     """
     if kernel not in KERNELS:
         raise ValueError(f"unknown kernel {kernel!r}; available: {sorted(KERNELS)}")
@@ -153,95 +236,28 @@ def fold_weights(
     def fold_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order, kind="mergesort")
         X = np.stack(pdf[features_col].to_numpy()).astype(np.float64, copy=False)
-        y = pdf[label_col].to_numpy(dtype=np.float64)
-        ts = pdf[ts_col].to_numpy()
-        rows = _fold_one_conv(
-            str(pdf[entity_col].iloc[0]),
-            X,
-            y,
-            ts,
-            kernel,
-            batch_size,
-            num_features,
-            kk,
-            with_accuracy,
-            max_train_rows,
+        loop = WindowLoop(
+            kernel, X.shape[1], batch_size, num_features, kk, max_train_rows, with_accuracy=with_accuracy
         )
-        return _rows_to_pdf(rows)
+        recs = loop.feed(X, pdf[label_col].to_numpy(dtype=np.float64), pdf[ts_col].to_numpy(), final=True)
+        mem = _mem_bytes()
+        conv_id = pdf[entity_col].iloc[0]
+        out = pd.DataFrame(
+            [
+                (conv_id, wid, rows, ts_end, w.tolist(), sel.tolist(), acc, trows, elapsed, mem)
+                for wid, rows, ts_end, w, sel, acc, trows, elapsed in recs
+            ],
+            columns=[f.name for f in WEIGHTS_SCHEMA.fields],
+        )
+        # np.datetime64 scalars in an object column confuse Arrow; normalize
+        out["ts_end"] = pd.to_datetime(out["ts_end"])
+        return out
 
     cols = [entity_col, *order, features_col, label_col]
     if ts_col not in cols:
         cols.append(ts_col)
-    return df.select(*dict.fromkeys(cols)).groupBy(entity_col).applyInPandas(fold_fn, WEIGHTS_SCHEMA)
-
-
-STATELESS_KERNELS = {"cancelout"}  # state is rebuilt every window (reference cancelout.py:165-194)
-
-
-def fold_weights_windowed(
-    df: DataFrame,
-    kernel: str = "cancelout",
-    batch_size: int = 50,
-    num_features: int = 5,
-    kernel_kwargs: dict[str, Any] | None = None,
-    entity_col: str = "conv_id",
-    order_cols: tuple[str, ...] = ("turn_idx", "ts"),
-    features_col: str = "features",
-    label_col: str = "label",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Window-parallel fold for STATELESS kernels (no cross-window state):
-    assign window ids declaratively, then run the kernel once per
-    (entity, window) group. Unlike the sequential folds, a giant
-    conversation parallelizes across its own windows. Results are
-    bit-identical to the sequential folds for these kernels.
-
-    Trade-off (measured): this path pays a full shuffle on
-    (entity, window) plus one Arrow round-trip per window, so it only wins
-    when per-window kernel compute dominates per-row data movement — e.g.
-    large batch_size × many training epochs, or a single entity holding
-    most of the data AND an expensive kernel. For CancelOut at the default
-    20 epochs / batch 50 the sequential scan is as fast or faster; prefer
-    this path for heavy window workloads (wide nets, hundreds of epochs)."""
-    if kernel not in KERNELS:
-        raise ValueError(f"unknown kernel {kernel!r}; available: {sorted(KERNELS)}")
-    if kernel not in STATELESS_KERNELS:
-        raise ValueError(
-            f"kernel {kernel!r} carries cross-window state; "
-            f"window-parallel folding is only valid for {sorted(STATELESS_KERNELS)}"
-        )
-    from pystreamfs_spark.operators.windows import assign_count_windows
-
-    kk = dict(kernel_kwargs or {})
-    order = list(order_cols)
-    cols = list(dict.fromkeys([entity_col, *order, features_col, label_col, ts_col]))
-    win = assign_count_windows(
-        df.select(*cols), entity_col=entity_col, order_cols=order_cols, batch_size=batch_size
-    )
-
-    def one_window(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
-        X = np.stack(pdf[features_col].to_numpy()).astype(np.float64, copy=False)
-        y = pdf[label_col].to_numpy(dtype=np.float64)
-        state = init_state(kernel, X.shape[1], num_features=num_features, **kk)
-        t0 = time.perf_counter()
-        _, w = update(kernel, state, X, y)
-        selected = select_top_m(w, num_features)
-        row = (
-            str(pdf[entity_col].iloc[0]),
-            int(pdf["window_id"].iloc[0]),
-            len(pdf),
-            pdf[ts_col].iloc[-1],
-            w.tolist(),
-            [int(j) for j in selected],
-            None,
-            0,
-            time.perf_counter() - t0,
-            _mem_bytes(),
-        )
-        return _rows_to_pdf([row])
-
-    return win.groupBy(entity_col, "window_id").applyInPandas(one_window, WEIGHTS_SCHEMA)
+    prepared = _entity_as_string(df.select(*dict.fromkeys(cols)), entity_col)
+    return prepared.groupBy(entity_col).applyInPandas(fold_fn, WEIGHTS_SCHEMA)
 
 
 def fold_weights_stream(
@@ -307,112 +323,46 @@ def fold_weights_stream(
         out_type_sel = pa.list_(pa.int32())
         ts_type = None  # set from the first input batch (preserves Spark's tz)
 
-        cur_conv = None
-        state: Any = None
-        wid = 0
-        carry_X: np.ndarray | None = None
-        carry_y: np.ndarray | None = None
-        carry_last_ts = 0
-        m_holder = [0]
-        # bounded prequential buffer (with_accuracy): the most recent
-        # max_train_rows rows of the current entity that have completed a
-        # window — the capped strict prefix
-        buf_X: np.ndarray | None = None
-        buf_y: np.ndarray | None = None
-        rows_seen = 0
-
-        # per-output-batch accumulators (plain python lists → arrow arrays)
+        cur_conv: Any = _NO_ENTITY  # a null id is an entity, so not None
+        loop: WindowLoop | None = None
+        # per-output-batch accumulators: entity id + WindowLoop record
         o_conv: list = []
-        o_wid: list[int] = []
-        o_rows: list[int] = []
-        o_ts: list[int] = []
-        o_w: list[np.ndarray] = []
-        o_sel: list[np.ndarray] = []
-        o_acc: list = []
-        o_train: list[int] = []
-        o_elapsed: list[float] = []
+        o_recs: list[tuple] = []
 
-        def run_windows(X, y, ts, final):
-            nonlocal state, wid, carry_X, carry_y, carry_last_ts
-            nonlocal buf_X, buf_y, rows_seen
-            if carry_X is not None and len(carry_X):
-                X = np.concatenate([carry_X, X]) if len(X) else carry_X
-                y = np.concatenate([carry_y, y]) if len(y) else carry_y
-                ts = np.concatenate([np.full(len(carry_X), carry_last_ts, dtype=np.int64), ts])
-                carry_X = carry_y = None
-            n = len(X)
-            start = 0
-            while n - start >= batch_size or (final and start < n):
-                stop = min(start + batch_size, n)
-                t0 = time.perf_counter()
-                state, w = update(kernel, state, X[start:stop], y[start:stop])
-                selected = select_top_m(w, num_features)
-                acc = None
-                trows = 0
-                if with_accuracy:
-                    from pystreamfs_spark.classify import knn_accuracy
-
-                    x_test = X[start:stop][:, selected]
-                    y_test = y[start:stop]
-                    if rows_seen == 0:  # t=0 quirk: train = test (utils.py:39-42)
-                        acc = knn_accuracy(x_test, y_test, x_test, y_test)
-                        trows = stop - start
-                    else:
-                        acc = knn_accuracy(buf_X[:, selected], buf_y, x_test, y_test)
-                        trows = rows_seen  # full-prefix count, like fold_weights
-                    win_X, win_y = X[start:stop], y[start:stop]
-                    buf_X = win_X if buf_X is None else np.concatenate([buf_X, win_X])
-                    buf_y = win_y if buf_y is None else np.concatenate([buf_y, win_y])
-                    if len(buf_X) > max_train_rows:
-                        buf_X = buf_X[-max_train_rows:].copy()
-                        buf_y = buf_y[-max_train_rows:].copy()
-                    rows_seen += stop - start
-                o_conv.append(cur_conv)
-                o_wid.append(wid)
-                o_rows.append(stop - start)
-                o_ts.append(int(ts[stop - 1]))
-                o_w.append(w)
-                o_sel.append(selected)
-                o_acc.append(acc)
-                o_train.append(trows)
-                o_elapsed.append(time.perf_counter() - t0)
-                wid += 1
-                start = stop
-            if start < n:
-                carry_X, carry_y = X[start:].copy(), y[start:].copy()
-                carry_last_ts = int(ts[-1])
+        def emit(recs: list[tuple]) -> None:
+            o_conv.extend([cur_conv] * len(recs))
+            o_recs.extend(recs)
 
         def flush_output() -> "pa.RecordBatch":
-            nonlocal o_conv, o_wid, o_rows, o_ts, o_w, o_sel, o_acc, o_train, o_elapsed
-            k = len(o_conv)
-            w_flat = np.concatenate(o_w) if o_w else np.empty(0)
-            sel_flat = np.concatenate(o_sel).astype(np.int32) if o_sel else np.empty(0, np.int32)
+            k = len(o_recs)
+            wid, rows, ts_end, w, sel, acc, trows, elapsed = zip(*o_recs)
+            w_flat = np.concatenate(w)
+            sel_flat = np.concatenate(sel).astype(np.int32)
             # offsets from ACTUAL lengths (a selection is min(num_features, m)
             # entries; m may differ across entities in exotic inputs)
             w_off = np.zeros(k + 1, dtype=np.int32)
-            np.cumsum([len(v) for v in o_w], out=w_off[1:])
+            np.cumsum([len(v) for v in w], out=w_off[1:])
             sel_off = np.zeros(k + 1, dtype=np.int32)
-            np.cumsum([len(v) for v in o_sel], out=sel_off[1:])
-            mem = _mem_bytes()
+            np.cumsum([len(v) for v in sel], out=sel_off[1:])
             batch = pa.RecordBatch.from_arrays(
                 [
                     pa.array(o_conv, type=pa.string()),
-                    pa.array(o_wid, type=pa.int64()),
-                    pa.array(o_rows, type=pa.int64()),
+                    pa.array(wid, type=pa.int64()),
+                    pa.array(rows, type=pa.int64()),
                     pa.array(
-                        [None if v == _TS_NULL else v for v in o_ts], type=pa.int64()
+                        [None if v == _TS_NULL else int(v) for v in ts_end], type=pa.int64()
                     ).cast(ts_type),
                     pa.ListArray.from_arrays(pa.array(w_off), pa.array(w_flat, type=pa.float64()), type=out_type_w),
                     pa.ListArray.from_arrays(pa.array(sel_off), pa.array(sel_flat, type=pa.int32()), type=out_type_sel),
-                    pa.array(o_acc, type=pa.float64()),
-                    pa.array(o_train, type=pa.int64()),
-                    pa.array(o_elapsed, type=pa.float64()),
-                    pa.array(np.full(k, mem, dtype=np.int64)),
+                    pa.array(acc, type=pa.float64()),
+                    pa.array(trows, type=pa.int64()),
+                    pa.array(elapsed, type=pa.float64()),
+                    pa.array(np.full(k, _mem_bytes(), dtype=np.int64)),
                 ],
                 names=[f.name for f in WEIGHTS_SCHEMA.fields],
             )
-            o_conv, o_wid, o_rows, o_ts, o_w, o_sel, o_elapsed = [], [], [], [], [], [], []
-            o_acc, o_train = [], []
+            o_conv.clear()
+            o_recs.clear()
             return batch
 
         idx = None
@@ -432,7 +382,6 @@ def fold_weights_stream(
             vals = feats.values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
             offs = feats.offsets.to_numpy(zero_copy_only=False)
             m = int(offs[1] - offs[0])
-            m_holder[0] = m
             Xb = vals[offs[0] : offs[-1]].reshape(rb.num_rows, m)
             yb = rb.column(idx[label_col]).to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
             ts_arrow = rb.column(idx[ts_col]).cast(pa.int64())
@@ -442,29 +391,31 @@ def fold_weights_stream(
             tsb = ts_arrow.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
 
             if rb.num_rows > 1:
-                neq = pa_compute.not_equal(
-                    conv_col.slice(1), conv_col.slice(0, rb.num_rows - 1)
-                )
+                prev, nxt = conv_col.slice(0, rb.num_rows - 1), conv_col.slice(1)
+                neq = pa_compute.not_equal(nxt, prev)
+                if conv_col.null_count:
+                    # null ids: a boundary where exactly one side is null
+                    one_null = pa_compute.xor(pa_compute.is_null(nxt), pa_compute.is_null(prev))
+                    neq = pa_compute.fill_null(pa_compute.or_kleene(neq, one_null), False)
                 bounds = np.flatnonzero(neq.to_numpy(zero_copy_only=False)) + 1
             else:
                 bounds = np.empty(0, dtype=np.int64)
-            segs = np.split(np.arange(rb.num_rows), bounds)
-            for seg in segs:
-                conv = conv_col[seg[0]].as_py()
+            edges = [0, *bounds.tolist(), rb.num_rows]
+            for lo, hi in zip(edges[:-1], edges[1:]):
+                conv = conv_col[lo].as_py()
                 if conv != cur_conv:
-                    if cur_conv is not None and carry_X is not None:
-                        run_windows(np.empty((0, m)), np.empty(0), np.empty(0, dtype=np.int64), final=True)
+                    if loop is not None:
+                        emit(loop.finish())
                     cur_conv = conv
-                    state = init_state(kernel, m, num_features=num_features, **kk)
-                    wid = 0
-                    buf_X = buf_y = None
-                    rows_seen = 0
-                run_windows(Xb[seg[0] : seg[-1] + 1], yb[seg[0] : seg[-1] + 1], tsb[seg[0] : seg[-1] + 1], final=False)
-            if o_conv:
+                    loop = WindowLoop(
+                        kernel, m, batch_size, num_features, kk, max_train_rows, with_accuracy=with_accuracy
+                    )
+                emit(loop.feed(Xb[lo:hi], yb[lo:hi], tsb[lo:hi]))
+            if o_recs:
                 yield flush_output()
-        if cur_conv is not None and carry_X is not None:
-            run_windows(np.empty((0, m_holder[0])), np.empty(0), np.empty(0, dtype=np.int64), final=True)
-        if o_conv:
+        if loop is not None:
+            emit(loop.finish())
+        if o_recs:
             yield flush_output()
 
     # Hash-partition on the entity (NOT range): no sampling pass, better
@@ -472,13 +423,11 @@ def fold_weights_stream(
     # eliminated by Catalyst when the upstream featurization window already
     # hash-partitioned by the same key. Skewed giant entities are bounded by
     # the streaming scan's O(batch) memory either way.
-    if assume_partitioned:
-        prepared = df.select(*cols)
-    else:
+    prepared = _entity_as_string(df.select(*cols), entity_col)
+    if not assume_partitioned:
         parts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         prepared = (
-            df.select(*cols)
-            .repartition(int(parts), entity_col)
+            prepared.repartition(int(parts), entity_col)
             .sortWithinPartitions(entity_col, *order)
         )
     # Lazy localCheckpoint on the weights output (r06, measured): the fold

@@ -42,8 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pystreamfs_spark.kernels.base import select_top_m
-from pystreamfs_spark.kernels.fsds import FSDSState, fsds_update
+from pystreamfs_spark.fold import WindowLoop
+from pystreamfs_spark.kernels.fsds import FSDSState
 from pystreamfs_spark.operators.windows import assign_count_windows
 
 _SKETCH_SCHEMA = StructType(
@@ -74,26 +74,12 @@ _OUT_SCHEMA = StructType(
 
 
 def _sketch_update(B: np.ndarray | None, Yt: np.ndarray, ell: int) -> np.ndarray:
-    """One FD hstack+svd+shrink step WITHOUT the ridge/weights tail — phase A
-    only needs the sketch, and skipping the weights step avoids the
-    reference's s[k−1] indexing on degenerate (few-column) windows."""
-    if B is None or B.size == 0:
-        C = Yt
-    else:
-        C = np.hstack((B, Yt))
-    U, s, _ = np.linalg.svd(C, full_matrices=False)
-    U = U[:, :ell]
-    s = s[:ell]
-    with np.errstate(invalid="ignore"):
-        s = np.sqrt(s**2 - s[-1] ** 2)
-    s = np.nan_to_num(s)
-    return np.dot(U, np.diag(s))
-
-
-def _merge_sketches(B1: np.ndarray | None, B2: np.ndarray, ell: int) -> np.ndarray:
-    """FD merge: treat B2's columns as a batch appended to sketch B1 —
-    the same hstack+svd+shrink step the per-window update performs."""
-    C = B2 if B1 is None or B1.size == 0 else np.hstack((B1, B2))
+    """One FD hstack+svd+shrink step WITHOUT the ridge/weights tail. Phase A
+    appends a window's columns ``Yt`` (skipping the weights step avoids the
+    reference's s[k−1] indexing on degenerate few-column windows); phase B
+    merges a chunk's sketch into the prefix by appending its columns the
+    same way."""
+    C = Yt if B is None or B.size == 0 else np.hstack((B, Yt))
     U, s, _ = np.linalg.svd(C, full_matrices=False)
     U = U[:, :ell]
     s = s[:ell]
@@ -156,7 +142,7 @@ def fold_fsds_fast(
         for _, row in pdf.iterrows():
             out.append((row["conv_id"], int(row["chunk"]), pickle.dumps(prefix)))
             B = pickle.loads(row["sketch"])
-            prefix = _merge_sketches(prefix, B, resolved_ell)
+            prefix = _sketch_update(prefix, B, resolved_ell)
         return pd.DataFrame(out, columns=["conv_id", "chunk", "prefix"])
 
     prefixes = sketches.groupBy("conv_id").applyInPandas(prefix_scan, _PREFIX_SCHEMA)
@@ -168,28 +154,21 @@ def fold_fsds_fast(
     def refold_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order, kind="mergesort")
         X = np.stack(pdf[features_col].to_numpy()).astype(np.float64, copy=False)
-        wids = pdf["window_id"].to_numpy()
         prefix = pickle.loads(pdf["prefix"].iloc[0])
         state = FSDSState.init(X.shape[1], k=k, ell=ell)
         if prefix is not None:
             state.B = prefix
             state.ell = resolved_ell
-        out = []
-        start = 0
-        while start < len(X):
-            stop = min(start + batch_size, len(X))
-            state, w = fsds_update(state, X[start:stop])
-            sel = select_top_m(w, num_features)
-            out.append(
-                (
-                    str(pdf[entity_col].iloc[0]),
-                    int(wids[start]),
-                    stop - start,
-                    w.tolist(),
-                    [int(j) for j in sel],
-                )
-            )
-            start = stop
+        loop = WindowLoop(
+            "fsds", X.shape[1], batch_size, num_features,
+            state=state, window_id=int(pdf["window_id"].iloc[0]),
+        )
+        conv_id = str(pdf[entity_col].iloc[0])
+        # FSDS is unsupervised: the labels fed to the loop are placeholders
+        out = [
+            (conv_id, wid, rows, w.tolist(), sel.tolist())
+            for wid, rows, _, w, sel, *_ in loop.feed(X, np.zeros(len(X)), final=True)
+        ]
         return pd.DataFrame(out, columns=[f.name for f in _OUT_SCHEMA.fields])
 
     return joined.groupBy(entity_col, "chunk").applyInPandas(refold_chunk, _OUT_SCHEMA)

@@ -5,9 +5,10 @@ pystreamfs.py:59), so bulk/backfill batch execution is the faithful mode
 (SURVEY.md §2.3). This adapter runs the SAME kernels over a live stream:
 
 - :func:`stream_fold` — per-entity ordered kernel fold as a custom stateful
-  operator (``applyInPandasWithState``). State = (pickled kernel state,
-  carried partial-window rows, next window id); identical arithmetic to the
-  batch fold. Exact batch parity holds when rows arrive in turn order
+  operator (``applyInPandasWithState``) feeding each micro-batch to the
+  batch folds' ``fold.WindowLoop``. State = (pickled kernel state, carried
+  partial-window rows, next window id), restored into and read back from
+  the loop. Exact batch parity holds when rows arrive in turn order
   (monotone ``turn_idx`` per conversation) — rows older than the fold
   frontier are counted in ``n_late`` and skipped, mirroring a
   watermark-dropped late event.
@@ -37,7 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pystreamfs_spark.kernels import KERNELS, init_state, select_top_m, update
+from pystreamfs_spark.fold import WindowLoop
+from pystreamfs_spark.kernels import KERNELS
 
 STREAM_WEIGHTS_SCHEMA = StructType(
     [
@@ -162,19 +164,12 @@ def stream_fold(
         if len(fresh):
             X = np.stack(fresh[features_col].to_numpy()).astype(np.float64, copy=False)
             y = fresh[label_col].to_numpy(dtype=np.float64)
-            if kstate is None:
-                kstate = init_state(kernel, X.shape[1], num_features=num_features, **kk)
+            loop = WindowLoop(kernel, X.shape[1], batch_size, num_features, kk, state=kstate, window_id=wid)
+            loop.carry_X, loop.carry_y = carry_X, carry_y
             if sel_counts is None:
                 sel_counts = np.zeros(X.shape[1], dtype=np.int64)
-            if carry_X is not None and len(carry_X):
-                X = np.concatenate([carry_X, X])
-                y = np.concatenate([carry_y, y])
             next_turn = int(fresh[turn_col].iloc[-1]) + 1
-            start = 0
-            while len(X) - start >= batch_size:
-                stop = start + batch_size
-                kstate, w = update(kernel, kstate, X[start:stop], y[start:stop])
-                sel = select_top_m(w, num_features)
+            for win_id, win_rows, _, w, sel, *_ in loop.feed(X, y):
                 # FSCR vs the previous window of this entity, carried in
                 # state across micro-batches (reference utils.py:4-18)
                 fscr_val = (
@@ -183,24 +178,13 @@ def stream_fold(
                     else len(set(prev_sel).difference(set(sel))) / num_features
                 )
                 sel_counts[sel] += 1
-                stab = _running_nogueira(sel_counts, wid + 1, len(sel))
+                stab = _running_nogueira(sel_counts, win_id + 1, len(sel))
                 out.append(
-                    (
-                        conv_id,
-                        wid,
-                        batch_size,
-                        w.tolist(),
-                        [int(j) for j in sel],
-                        fscr_val,
-                        stab,
-                        n_late,
-                    )
+                    (conv_id, win_id, win_rows, w.tolist(), sel.tolist(), fscr_val, stab, n_late)
                 )
-                prev_sel = [int(j) for j in sel]
+                prev_sel = sel.tolist()
                 n_late = 0
-                wid += 1
-                start = stop
-            carry_X, carry_y = X[start:].copy(), y[start:].copy()
+            kstate, wid, carry_X, carry_y = loop.state, loop.wid, loop.carry_X, loop.carry_y
 
         state.update(
             (

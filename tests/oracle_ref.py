@@ -103,14 +103,19 @@ def simulate(
     k: int = 2,
     ell: int = 0,
     with_accuracy: bool = False,
+    max_train_rows: int | None = None,
 ) -> dict:
-    """Replay one stream; returns dict of per-window lists."""
+    """Replay one stream; returns dict of per-window lists.
+
+    ``max_train_rows=M`` trains window i on X[max(0, i-M):i] instead of the
+    whole prefix (t=0 still trains on the window itself); ``train_rows``
+    reports the full prefix length either way."""
     m = X.shape[1]
     w = np.zeros(m, dtype=int)
     B = []
     u = np.ones(m) * 2
     v = np.ones(m)
-    out = {"w": [], "selected": [], "fscr": [], "acc": []}
+    out = {"w": [], "selected": [], "fscr": [], "acc": [], "train_rows": []}
     for i in range(0, X.shape[0], batch_size):
         Xb, Yb = X[i : i + batch_size], Y[i : i + batch_size]
         if kernel == "ofs":
@@ -132,8 +137,11 @@ def simulate(
             y_test = Y[i:stop]
             if i == 0:
                 x_train, y_train = x_test, y_test
+                out["train_rows"].append(stop)
             else:
-                x_train = X[0:i][:, selected]
-                y_train = Y[0:i]
+                lo = 0 if max_train_rows is None else max(0, i - max_train_rows)
+                x_train = X[lo:i][:, selected]
+                y_train = Y[lo:i]
+                out["train_rows"].append(i)
             out["acc"].append(knn_accuracy(x_train, y_train, x_test, y_test, k=5))
     return out

@@ -236,3 +236,92 @@ def test_scan_path_bit_identical_under_cancellation():
     w_refe, u_ref, v_ref = efs_window(X, y, np.ones(m) * 2, np.ones(m), 1.5, 0.5, 1.0, 1.0)
     assert np.array_equal(w_eefs, w_refe), "efs cancellation"
     assert np.array_equal(est.u, u_ref) and np.array_equal(est.v, v_ref)
+
+
+@pytest.mark.parametrize("strategy", [fold_weights, fold_weights_stream])
+def test_capped_accuracy_matches_oracle(spark, featurized, per_conv_matrices, strategy):
+    """Both feeders' capped prequential prefix against the oracle's
+    X[max(0, i-M):i] rule — not only against each other."""
+    M = 20
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        eng = _collect_engine(
+            strategy(
+                featurized, kernel="ofs", batch_size=BATCH, num_features=NUM_FEATURES,
+                with_accuracy=True, max_train_rows=M,
+            )
+        )
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    capped = 0
+    for conv_id, (X, y) in per_conv_matrices.items():
+        ora = simulate(
+            X, y, kernel="ofs", batch_size=BATCH, num_features=NUM_FEATURES,
+            with_accuracy=True, max_train_rows=M,
+        )
+        assert [eng[conv_id][wid].acc for wid in range(len(ora["acc"]))] == ora["acc"], conv_id
+        assert [eng[conv_id][wid].train_rows for wid in range(len(ora["acc"]))] == ora["train_rows"]
+        capped += sum(t > M for t in ora["train_rows"])
+    assert capped  # the cap bites
+
+
+def _entity_frame(spark, ids, id_type):
+    """Three entities with interleaved arrival; ``ids`` gives their ids."""
+    import datetime as dt
+
+    rng = np.random.default_rng(4)
+    t0 = dt.datetime(2024, 1, 1)
+    rows, per_entity = [], {}
+    for e, n in zip(ids, (20, 17, 5)):
+        X = rng.normal(size=(n, 6))
+        y = (X[:, 0] > 0).astype(float)
+        per_entity[e] = (X, y)
+        rows += [(e, i, t0 + dt.timedelta(seconds=i), X[i].tolist(), float(y[i])) for i in range(n)]
+    rng.shuffle(rows)
+    schema = f"conv_id {id_type}, turn_idx int, ts timestamp, features array<double>, label double"
+    return spark.createDataFrame(rows, schema), per_entity
+
+
+@pytest.mark.parametrize(
+    "ids,id_type,out_ids",
+    [(("a", None, "b"), "string", ("a", None, "b")), ((1, None, 22), "bigint", ("1", None, "22"))],
+)
+def test_degenerate_entity_ids(spark, ids, id_type, out_ids):
+    """A null id folds as one entity whose output conv_id is NULL; a
+    non-string id comes out as its string form — identically in both
+    feeders, across tiny Arrow batches."""
+    df, per_entity = _entity_frame(spark, ids, id_type)
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+    try:
+        got = {
+            strategy.__name__: {
+                (r.conv_id, r.window_id): (r.w, list(r.selected), r.win_rows, r.acc, r.train_rows)
+                for r in strategy(
+                    df, kernel="ofs", batch_size=6, num_features=3,
+                    with_accuracy=True, max_train_rows=8,
+                ).collect()
+            }
+            for strategy in (fold_weights, fold_weights_stream)
+        }
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert got["fold_weights"] == got["fold_weights_stream"]
+    assert {k[0] for k in got["fold_weights"]} == set(out_ids)
+    for e, out_id in zip(ids, out_ids):
+        X, y = per_entity[e]
+        ora = simulate(X, y, kernel="ofs", batch_size=6, num_features=3, with_accuracy=True, max_train_rows=8)
+        for wid, w in enumerate(ora["w"]):
+            row = got["fold_weights"][(out_id, wid)]
+            np.testing.assert_allclose(np.array(row[0]), w, rtol=1e-9, atol=1e-12)
+            assert row[1] == ora["selected"][wid]
+            assert (row[3], row[4]) == (ora["acc"][wid], ora["train_rows"][wid])
+        assert (out_id, len(ora["w"])) not in got["fold_weights"]
+
+
+@pytest.mark.skipif(not __import__("os").path.exists("/proc/self/statm"), reason="needs /proc")
+@pytest.mark.parametrize("strategy", [fold_weights, fold_weights_stream])
+def test_fold_reports_memory(featurized, strategy):
+    rows = strategy(featurized, kernel="ofs", batch_size=BATCH, num_features=NUM_FEATURES).collect()
+    assert rows and all(r.mem_bytes > 0 for r in rows)
