@@ -2,11 +2,12 @@
 
 Each kernel implements the published online feature-selection algorithm the
 reference harness dispatches per window (reference contract:
-``fs_algorithm(X, Y, w, param) -> (w, param)``, see
-/root/reference/pystreamfs/pystreamfs.py:68). Kernels here are written from
-scratch against the papers + the reference's observable semantics; they carry
-explicit, picklable state objects instead of a mutable ``param`` dict and are
-executed inside Arrow ``applyInPandas`` folds (pystreamfs_spark.fold).
+``fs_algorithm(X, Y, w, param) -> (w, param)``, see pystreamfs
+``pystreamfs.py``). Kernels here are written from scratch against the papers
++ the reference's observable semantics; they carry explicit, picklable state
+objects instead of a mutable ``param`` dict and are run by the one window loop
+:class:`pystreamfs_spark.fold.WindowLoop`, which every fold feeds (an Arrow
+``mapInArrow`` scan by default).
 """
 
 from pystreamfs_spark.kernels.ofs import OFSState, ofs_update

@@ -84,7 +84,10 @@ def connected_components(
 ) -> DataFrame:
     """Label every node of the undirected graph with the MIN node id of its
     connected component. Input: an edge list (directed or not, dups fine).
-    Output: (id, component) for every node that appears in an edge.
+    Output: (id, component) for every node that appears in an edge whose
+    endpoints are both non-NULL — an edge with a NULL endpoint is dropped
+    before labeling, on both paths below, so its non-NULL endpoint gets a
+    row only if another edge reaches it.
 
     ``local_threshold`` (r06, measured): an edge list at or below this many
     rows is collected and union-found driver-side — the same size-gated
@@ -119,8 +122,12 @@ def connected_components(
     # immediately, and edge lists are duplicate-pair-sized, not
     # corpus-sized. Swap for checkpoint() with a durable dir on a real
     # cluster — same note as the per-round label checkpoints below.
-    e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=True
+    # NULL endpoints dropped before the gate: union-find cannot order NULL
+    # and the distributed loop would emit a NULL-id node.
+    e0 = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .where(F.col("u").isNotNull() & F.col("v").isNotNull())
+        .localCheckpoint(eager=True)
     )
     n_edges = e0.count()  # a metadata-cheap scan of the checkpointed blocks
     if n_edges <= local_threshold:

@@ -408,6 +408,13 @@ def bloom_densify(
     return blooms.select(*keep, dense.alias(dense_col))
 
 
+def _check_probe_k(k_hashes: int) -> None:
+    # bloom_build rejects k < 1, so no probe can match a sketch with it; the
+    # empty AND chain / forall would otherwise answer NULL / TRUE
+    if k_hashes < 1:
+        raise ValueError(f"bloom_might_contain: k_hashes must be >= 1, got {k_hashes}")
+
+
 def bloom_might_contain_dense(
     item: Column,
     k_hashes: int,
@@ -431,6 +438,7 @@ def bloom_might_contain_dense(
     identical matches. (The MAP-probe twin above keeps its forall: there
     the linear map scans dominate and halving the md5s wins — measured in
     the same round.)"""
+    _check_probe_k(k_hashes)
     ok = None
     for r in range(k_hashes):
         pos = _cm_bucket(item, r, m_bits)
@@ -474,6 +482,7 @@ def bloom_might_contain(
     so the inline form pays 2k md5 per probed item; this form pays k).
     Probing is md5-bound, so halving the hashes outweighs the lambda's
     interpreted evaluation. Same boolean for every input."""
+    _check_probe_k(k_hashes)
     positions = F.array(*[_cm_bucket(item, r, m_bits) for r in range(k_hashes)])
     ok = F.forall(
         positions,

@@ -174,19 +174,18 @@ def test_stream_accuracy_requires_cap(spark):
         fold_weights_stream(f, with_accuracy=True)
 
 
-def test_large_window_scan_path_bit_identical():
-    """The margin-event chunked-scan path (engaged only for windows >=
-    kernels.ofs._VECTOR_MIN_ROWS) must produce the EXACT reference weight
-    trajectory — sparse (separable) and dense (noisy) violation regimes."""
+def test_large_window_kernels_bit_identical_to_reference():
+    """One 4000-row window through ofs_update/efs_update must produce the
+    EXACT reference weight trajectory — sparse (separable) and dense
+    (noisy) violation regimes."""
     import numpy as np
 
     from oracle_ref import efs_window, ofs_window
     from pystreamfs_spark.kernels.efs import EFSState, efs_update
-    from pystreamfs_spark.kernels.ofs import _VECTOR_MIN_ROWS, OFSState, ofs_update
+    from pystreamfs_spark.kernels.ofs import OFSState, ofs_update
 
     rng = np.random.default_rng(123)
     m, n = 16, 4000
-    assert n >= _VECTOR_MIN_ROWS
     tw = np.zeros(m)
     tw[:5] = 8.0
     scenarios = {
@@ -196,7 +195,7 @@ def test_large_window_scan_path_bit_identical():
     for name, label_fn in scenarios.items():
         X = rng.normal(size=(n, m)) * 3.0
         y = label_fn(X)
-        # one giant window: the scan path runs end-to-end with chunk growth
+        # one giant window
         st, w_eng = ofs_update(OFSState.init(m, 5), X, y)
         w_ref = ofs_window(X, y, np.zeros(m), 5)
         assert np.array_equal(w_eng, w_ref), f"ofs {name}"
@@ -209,20 +208,18 @@ def test_large_window_scan_path_bit_identical():
         assert np.array_equal(est.u, u_ref) and np.array_equal(est.v, v_ref)
 
 
-def test_scan_path_bit_identical_under_cancellation():
-    """Adversarial regime for the pre-filter band (code-review r03): huge
-    feature magnitudes where <w,x> suffers catastrophic cancellation, so a
-    relative-in-t band would misclassify near-margin rows as safe. The
-    rigorous absolute-dot bound must keep the trajectory bit-identical."""
+def test_large_window_kernels_bit_identical_under_cancellation():
+    """Adversarial regime: huge feature magnitudes where <w,x> suffers
+    catastrophic cancellation, so near-margin decisions are fragile. One
+    3000-row window must keep the reference trajectory bit-identical."""
     import numpy as np
 
     from oracle_ref import efs_window, ofs_window
     from pystreamfs_spark.kernels.efs import EFSState, efs_update
-    from pystreamfs_spark.kernels.ofs import _VECTOR_MIN_ROWS, OFSState, ofs_update
+    from pystreamfs_spark.kernels.ofs import OFSState, ofs_update
 
     rng = np.random.default_rng(77)
     m, n = 16, 3000
-    assert n >= _VECTOR_MIN_ROWS
     # paired ±huge columns: products ~1e8 cancel to O(1..1e3) margins
     base = rng.normal(size=(n, m // 2)) * 1e4
     X = np.concatenate([base, -base + rng.normal(size=(n, m // 2))], axis=1)

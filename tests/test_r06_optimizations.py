@@ -2,14 +2,11 @@
 
 Every optimization in this round is required to be VALUE-IDENTICAL to the
 form it replaced (the driver re-hashes every oracled query). These tests
-pin the three internals that changed:
+pin the internals that changed, among them:
 
-1. functions.vectors ``dims`` unroll == the HOF fold, bit for bit —
-   including rows whose array length differs from ``dims`` (the per-row
-   CASE WHEN fallback).
-2. ann._ranked_cells(nv_col=...) (norm-hoisted ranking over a
+1. ann._ranked_cells(nv_col=...) (norm-hoisted ranking over a
    ``_cells_row(with_norms=True)`` broadcast row) == the plain ranking.
-3. graph.connected_components still labels correctly after the edge-plan
+2. graph.connected_components still labels correctly after the edge-plan
    localCheckpoint truncation (a chain graph that needs pointer jumping).
 """
 
@@ -25,54 +22,6 @@ from tests.conftest import SF_DIR  # noqa: E402
 
 def _emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-
-
-def test_vectors_dims_unroll_bitwise_equals_fold(spark):
-    from pystreamfs_spark.functions.vectors import cosine, dot, norm
-
-    emb = _emb(spark)
-    pair = emb.alias("a").join(
-        emb.alias("b"), F.col("a.vec_id") + 1 == F.col("b.vec_id")
-    ).select(
-        F.col("a.embedding").alias("va"), F.col("b.embedding").alias("vb")
-    )
-    rows = pair.select(
-        dot("va", "vb", 64).alias("d_u"),
-        dot(F.col("va"), F.col("vb")).alias("d_f"),
-        norm("va", 64).alias("n_u"),
-        norm(F.col("va")).alias("n_f"),
-        cosine("va", "vb", 64).alias("c_u"),
-        cosine(F.col("va"), F.col("vb")).alias("c_f"),
-    ).collect()
-    assert rows
-    for r in rows:
-        # exact equality, not allclose: the unroll must reproduce the fold's
-        # left-to-right association bit for bit
-        assert r["d_u"] == r["d_f"]
-        assert r["n_u"] == r["n_f"]
-        assert r["c_u"] == r["c_f"]
-
-
-def test_vectors_dims_guard_falls_back_on_ragged_rows(spark):
-    from pystreamfs_spark.functions.vectors import dot, norm
-
-    emb = _emb(spark).select(
-        "vec_id",
-        F.when(F.col("vec_id") % 3 == 0, F.slice("embedding", 1, 17))
-        .otherwise(F.col("embedding"))
-        .alias("v"),
-    )
-    rows = emb.select(
-        "vec_id",
-        dot("v", "v", 64).alias("d_u"),
-        dot(F.col("v"), F.col("v")).alias("d_f"),
-        norm("v", 64).alias("n_u"),
-        norm(F.col("v")).alias("n_f"),
-    ).collect()
-    assert any(r["vec_id"] % 3 == 0 for r in rows)  # ragged rows present
-    for r in rows:
-        assert r["d_u"] == r["d_f"], r
-        assert r["n_u"] == r["n_f"], r
 
 
 def test_ranked_cells_norm_hoisting_is_value_identical(spark):
@@ -192,6 +141,23 @@ def test_bloom_dense_probe_equals_map_probe(spark):
     assert via_map == via_dense and via_map  # non-empty (planted leakage)
 
 
+def test_bloom_probes_reject_k_below_one():
+    """Both probe twins refuse k_hashes < 1 when the expression is built,
+    as bloom_build does — no sketch can have such a k, and the empty bit
+    test would answer NULL (dense) or TRUE (map)."""
+    import pytest
+
+    from pystreamfs_spark.operators.sketches import (
+        bloom_might_contain,
+        bloom_might_contain_dense,
+    )
+
+    for probe in (bloom_might_contain, bloom_might_contain_dense):
+        for k in (0, -1):
+            with pytest.raises(ValueError, match="k_hashes must be >= 1"):
+                probe(F.col("gram"), k, 1 << 14)
+
+
 def test_minhash_capped_array_path_equals_join_path(spark):
     """The capped candidate path (anti-join cut of oversized buckets ->
     sorted bucket array -> positional pair explode) must emit exactly the
@@ -264,6 +230,22 @@ def test_connected_components_local_gate_equals_distributed(spark):
     # (string ids are out of contract for BOTH paths: the distributed
     # loop's convergence aggregate has always cast labels to decimal —
     # every engine caller keys CC on int/long ids)
+
+
+def test_connected_components_null_endpoints_same_on_both_paths(spark):
+    """Edges with a NULL endpoint are dropped before either path runs: the
+    driver union-find (which cannot order NULL) and the distributed loop
+    (which would emit a NULL-id node) return the same rows, and a node
+    reached only through NULL edges gets none."""
+    from pystreamfs_spark.operators.graph import connected_components
+
+    e = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (None, None), (4, 5), (5, 1), (7, None)],
+        "id_a long, id_b long",
+    )
+    local = sorted(map(tuple, connected_components(e).collect()))
+    dist = sorted(map(tuple, connected_components(e, local_threshold=0).collect()))
+    assert local == dist == [(1, 1), (2, 1), (4, 1), (5, 1)]
 
 
 def test_ngram_jaccard_capped_bucket_path_equals_join_path(spark):
